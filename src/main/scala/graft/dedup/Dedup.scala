@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: nothing here is O(n²) in the corpus —
   *  - exact dedup is a hash group-by on a 128-bit content hash;
-  *  - MinHash signatures are pure array expressions (codegen) and
+  *  - MinHash signatures are one native per-row expression (codegen) and
   *    candidate generation is a self-join keyed on (band, bandHash),
   *    i.e. a shuffle on the band key, linear + output-sized;
   *  - the Jaccard join is an inverted-index join keyed on token with
@@ -290,28 +290,32 @@ object Dedup {
     batch.join(hit, batch(idCol) === hit("batch_id"), "left_anti")
   }
 
-  /** MinHash signature of a token-set column: k independent hash
-    * functions (xxhash64 with the slot index as seed), each minimized
-    * over the set. Pure expressions — whole-stage codegen, no UDF,
-    * and ANSI-safe (no overflow arithmetic).
+  /** A token-set frame's rows with a non-empty `ws`, plus their
+    * per-row [[graft.functions.MinHashSignature]] as `_sig` (`k`
+    * slots). With [[bandKeys]], the one signature and band-key
+    * definition behind [[minhashPairs]] and [[minhashIndex]] — and
+    * behind every index they wrote, so `bks` stays comparable across
+    * indexes. Empty (or null) sets have no signature and drop out:
+    * they have no near-dup neighbors under Jaccard.
     */
-  def minhashSignature(tokens: Column, k: Int): Column = {
-    val sigs = (0 until k).map { i =>
-      array_min(transform(tokens, t => xxhash64(lit(i), t)))
-    }
-    array(sigs.toIndexedSeq: _*)
-  }
+  private def signed(sets: DataFrame, k: Int): DataFrame =
+    sets.filter(size(col("ws")) > 0)
+      .withColumn("_sig", graft.functions.MinHashSignature(col("ws"), k))
 
-  /** LSH band keys from a signature: `bands` hashes of `rowsPerBand`
-    * consecutive signature slots each.
+  /** LSH band keys of a signature column: `bands` structs (band, bh =
+    * xxhash64 of `rowsPerBand` consecutive slots). Callers pass the
+    * projected `_sig` of [[signed]], never the signature expression
+    * itself: each of the `bands` slices would re-evaluate it. For the
+    * same reason, explode this expression directly rather than an
+    * attribute holding it — Spark infers `size(arr) > 0` for an
+    * exploded attribute and pushes that filter below the projection,
+    * re-inlining every slice's signature.
     */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    val keys = (0 until bands).map { bnd =>
-      val sl = slice(sig, bnd * rowsPerBand + 1, rowsPerBand)
-      struct(lit(bnd).as("band"), xxhash64(sl).as("bh"))
-    }
-    array(keys.toIndexedSeq: _*)
-  }
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bh"))
+    }: _*)
 
   /** Exact Jaccard on two set columns (used for candidate
     * verification).
@@ -352,7 +356,6 @@ object Dedup {
                    threshold: Double, bands: Int = 32, rowsPerBand: Int = 4,
                    allPairsMaxSets: Long = 10000L, shingleN: Int = 1): DataFrame = {
     require(threshold <= 1.0, "jaccard threshold must be <= 1")
-    val k = bands * rowsPerBand
     val raw = df.select(col(idCol).as("id"), shingleSet(col(textCol), shingleN).as("ws"))
 
     // Cluster identical word-sets FIRST (128-bit content key over the
@@ -368,28 +371,17 @@ object Dedup {
 
     val exploded = clustered.select(col("sid").as("id"), explode(col("ws")).as("tok"))
 
-    // LSH candidate generation: signatures via explode -> groupBy with
-    // k codegen'd MIN aggregates (higher-order array functions are
-    // interpreted in Spark — an agg over exploded tokens stays in
-    // whole-stage codegen and map-side combines), then band keys and a
+    // LSH candidate generation: per-row signatures and band keys on the
+    // unique sets (no token explode, no shuffle by set id), then a
     // bucket self-join. Candidate ids deduped FIRST (narrow 2-column
     // shuffle) so exact verification runs once per pair, not once per
     // colliding band.
     def lshCandidates(): DataFrame = {
-      val sigCols = (0 until k).map(i => min(xxhash64(lit(i), col("tok"))).as(s"_s$i"))
-      // exploded tokens per id are exactly the distinct words, so the
-      // group count IS size(ws) — the size-bound prefilter's input
-      // rides the signature aggregation for free (r17)
-      val sigs = exploded.groupBy("id")
-        .agg(sigCols.head, (sigCols.tail :+ count(lit(1)).as("_sz")): _*)
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(array((0 until rowsPerBand).map(j => col(s"_s${b * rowsPerBand + j}")): _*))
-            .as("bh"))
-      }
-      val keyed = graft.CacheScope.persist(sigs
-        .select(col("id"), explode(array(bandCols: _*)).as("bk"), col("_sz"))
-        .select("bk", "id", "_sz")) // bands x ids only (~20B/row); read by both join sides
+      // bands x ids only (~20B/row); read by both join sides. Set sizes
+      // ride the band rows for the size-bound prefilter (r17)
+      val keyed = graft.CacheScope.persist(signed(clustered, bands * rowsPerBand)
+        .select(explode(bandKeys(col("_sig"), bands, rowsPerBand)).as("bk"),
+          col("sid").as("id"), size(col("ws")).as("_sz")))
       keyed.select(col("bk"), col("id").as("id_a"), col("_sz").as("sz_a"))
         .join(keyed.select(col("bk"), col("id").as("id_b"), col("_sz").as("sz_b")), "bk")
         .filter(col("id_a") < col("id_b") &&
@@ -496,9 +488,9 @@ object Dedup {
     * LSH work scales with unique sets, not docs — carrying the
     * cluster representative id (`sid`), the member ids, the set
     * itself (for exact re-score), and the banded signature keys
-    * (`bks`). Signatures come from the exploded-token min-aggregate
-    * (stays in whole-stage codegen and map-side combines); the sid
-    * join that re-attaches `ids`/`ws` is doc-count-sized.
+    * (`bks`). Signatures and band keys are computed per row on the
+    * clustered sets ([[signed]], [[bandKeys]]): the clustering
+    * groupBy is the only shuffle.
     *
     * PRODUCTION CONTRACT: materialize the STORE's index ONCE
     * (`minhashIndex(store…).write.parquet(…)`) and reuse it for
@@ -511,23 +503,14 @@ object Dedup {
   def minhashIndex(df: DataFrame, textCol: String, idCol: String,
                    bands: Int = 32, rowsPerBand: Int = 4,
                    shingleN: Int = 1): DataFrame = {
-    val k = bands * rowsPerBand
     val raw = df.select(col(idCol).as("id"), shingleSet(col(textCol), shingleN).as("ws"))
-    val clustered = graft.CacheScope.persist(raw
+    val clustered = raw
       .groupBy(md5(concat_ws("\u0001", sort_array(col("ws")))).as("_ck"))
       .agg(min(col("id")).as("sid"), collect_list(col("id")).as("ids"),
         first(col("ws")).as("ws"))
-      .drop("_ck"))
-    val exploded = clustered.select(col("sid"), explode(col("ws")).as("tok"))
-    val sigCols = (0 until k).map(i => min(xxhash64(lit(i), col("tok"))).as(s"_s$i"))
-    val sigs = exploded.groupBy("sid").agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(array((0 until rowsPerBand).map(j => col(s"_s${b * rowsPerBand + j}")): _*))
-          .as("bh"))
-    }
-    sigs.select(col("sid"), array(bandCols.toIndexedSeq: _*).as("bks"))
-      .join(clustered, "sid")
+      .drop("_ck")
+    signed(clustered, bands * rowsPerBand)
+      .select(col("sid"), bandKeys(col("_sig"), bands, rowsPerBand).as("bks"), col("ids"), col("ws"))
   }
 
   /** C33: near-store index UPSERT — merge an increment's
@@ -547,7 +530,7 @@ object Dedup {
     * The result is row-for-row EQUAL to `minhashIndex` over the
     * unioned documents (spec-gated), at the cost of ONE shuffle
     * linear in the two sides' distinct sets — the store never
-    * re-pays its 128-min-agg signature pass.
+    * re-tokenizes, re-clusters or re-signs its documents.
     *
     * Contract: ids are globally unique document identities and the
     * store is APPEND-ONLY — re-ingesting an id with the SAME text is
@@ -557,8 +540,8 @@ object Dedup {
     */
   def mergeNearIndexes(a: DataFrame, b: DataFrame): DataFrame = {
     // PINNED (r16): the union feeds BOTH the geometry-guard aggregate
-    // and the content-key regroup — unpinned, each side's 128-min-agg
-    // signature pass ran twice (once per consumer)
+    // and the content-key regroup — unpinned, each side's index
+    // (tokenize, cluster, sign) was computed twice (once per consumer)
     val u = graft.CacheScope.persist(a.unionByName(b))
     // Geometry guard: two indexes built with different `bands` carry band
     // keys from incompatible band spaces, and the content-key regroup would
@@ -618,7 +601,7 @@ object Dedup {
     require(threshold <= 1.0, "jaccard threshold must be <= 1")
     // pin both indexes: each is read THREE times (band explode + the
     // two re-attach joins) — unpersisted, every read re-runs the
-    // 128-min-agg signature computation (r13 bench finding: the
+    // index's tokenize + cluster + sign plan (r13 bench finding: the
     // recomputation tripled the sf0.1 wall-clock)
     val batchIndex = graft.CacheScope.persist(batchIndex0)
     val storeIndex = graft.CacheScope.persist(storeIndex0)

@@ -507,28 +507,6 @@ object SnapshotLog {
     } finally pool.shutdown()
   }
 
-  /** Exact total row count of data files from parquet FOOTERS alone
-    * (r17): a compaction needs N only to choose its output file
-    * count — paying a full table scan for it is pure read
-    * amplification (at 100 TB, a full extra pass per maintenance
-    * commit). Block row counts are authoritative parquet metadata.
-    * None on any surprise → caller falls back to the scan count.
-    */
-  private def footerRowCount(spark: SparkSession,
-                             absFiles: Seq[String]): Option[Long] = try {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val counts = inFooterPool(absFiles) { abs =>
-      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(abs), conf)
-      val r = ParquetFileReader.open(in)
-      val md = try r.getFooter finally r.close()
-      md.getBlocks.asScala.map(_.getRowCount).sum
-    }
-    Some(counts.sum)
-  } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Per-file numeric bounds from parquet footers (r16): Some((stats,
     * handledCols)) when every file's footer carries clean stats for
     * the plain-integer subset of `statsCols`; None = caller must use
@@ -1038,7 +1016,9 @@ object SnapshotLog {
     * Schema evolution across the range null-fills older steps'
     * missing columns; each step reads under ITS destination
     * version's committed schema. Metadata-only commits contribute
-    * nothing.
+    * nothing. A table column named like one of the columns the feed
+    * adds ([[CdfReserved]]) fails the call instead of being silently
+    * replaced.
     */
   def readChanges(spark: SparkSession, dir: String,
                   fromVersion: Long, toVersion: Long = -1L): DataFrame = {
@@ -1076,6 +1056,7 @@ object SnapshotLog {
           }
         val insRaw = side(added, gone)
         val delRaw = side(gone, added)
+        requireNoCdfCollision(spark, insRaw.columns.toSeq ++ delRaw.columns, v + 1)
         // pure-insert (append) / pure-delete steps skip the rewrite
         // anti-diff entirely (r16): the multiset difference against an
         // EMPTY side is the identity on one side and empty on the
@@ -1112,11 +1093,32 @@ object SnapshotLog {
         Some(step.withColumn("_commit_version", lit(v + 1L)))
       }
     }
-    if (steps.isEmpty)
-      read(spark, dir, to).filter(lit(false))
-        .withColumn("_change_type", lit(""))
+    if (steps.isEmpty) {
+      val empty = read(spark, dir, to).filter(lit(false))
+      requireNoCdfCollision(spark, empty.columns.toSeq, to)
+      empty.withColumn("_change_type", lit(""))
         .withColumn("_commit_version", lit(0L))
-    else steps.reduce(_.unionByName(_, allowMissingColumns = true))
+    } else steps.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** Columns [[readChanges]] adds next to the table's own: its two
+    * outputs and the rewrite diff's temporaries. `withColumn` would
+    * silently REPLACE a table column of the same name.
+    */
+  private val CdfReserved =
+    Seq("_change_type", "_commit_version", "_cdf_side", "_cdf_net", "_cdf_k")
+
+  /** Fail fast (driver-side, from the already-resolved schema — no
+    * job) when a table column collides with [[CdfReserved]], under
+    * the session's case sensitivity.
+    */
+  private def requireNoCdfCollision(spark: SparkSession, cols: Seq[String],
+                                    version: Long): Unit = {
+    val resolver = spark.sessionState.conf.resolver
+    val clash = cols.distinct.filter(c => CdfReserved.exists(resolver(c, _)))
+    require(clash.isEmpty,
+      s"[graft] readChanges: column(s) ${clash.mkString(", ")} of version $version " +
+        s"collide with the change feed's reserved columns (${CdfReserved.mkString(", ")})")
   }
 
   /** The files [[readPrunedStr]] would open. */

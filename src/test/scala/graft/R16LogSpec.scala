@@ -129,6 +129,26 @@ class R16LogSpec extends SparkSpec {
     assert(SnapshotLog.readChanges(spark, dir, 1L, 2L).count() == 0)
   }
 
+  test("CDF: a table column named like a feed column fails fast instead of being replaced") {
+    import org.apache.spark.sql.functions._
+    // the rewrite diff's temporaries, one matched case-insensitively,
+    // and an output column
+    for (name <- Seq("_cdf_side", "_cdf_net", "_CDF_K", "_change_type")) {
+      val dir = tmp("graft_cdf_reserved")
+      SnapshotLog.write((1L to 6L).map(i => (i, s"t$i", i % 2)).toDF("id", "text", name),
+        dir, statsCols = Seq("id"))
+      SnapshotLog.updateRange(spark, dir, "id", 2L, 3L,
+        Map("text" -> concat(col("text"), lit("!"))))                 // v1: rewrite
+      SnapshotLog.append(Seq((7L, "t7", 1L)).toDF("id", "text", name), dir,
+        statsCols = Seq("id"))                                        // v2: insert-only
+      for ((from, to) <- Seq((0L, 1L), (1L, 2L))) {
+        val e = intercept[IllegalArgumentException](
+          SnapshotLog.readChanges(spark, dir, from, to))
+        assert(e.getMessage.contains(name), e.getMessage)
+      }
+    }
+  }
+
   test("timestamp time travel: readAsOf resolves the version current at a wall-clock instant") {
     val dir = tmp("graft_asof")
     SnapshotLog.write((1L to 10L).toDF("id"), dir)
